@@ -8,12 +8,12 @@ byte-identical files (``test_perfbench.py`` checks it).
   calendar day and introducing a few new stations, in the raw FordGoBike
   column layout that ``sources.csv_source.read_trips_csv`` reads;
 * locations: the geocoded lookup for every station, as JSON lines;
-* the star-schema/TPC-H-style tables the analyst queries read
-  (``region`` .. ``embeddings``), as parquet, shaped like the repo's
-  ``sf*`` test data;
-* document waves with stated exact-duplicate, near-duplicate and fresh
-  shares, as JSON lines, plus the whole corpus as ``documents.parquet``
-  for the DuckDB oracle.
+* the tables the analyst queries read (``region`` .. ``embeddings``), as
+  a seeded row sample of the reference tables in ``ref/`` (a fixed
+  sample of the repo's sf0.1 test data, built by ``make_ref.py``);
+* document waves drawn from the reference documents, with stated
+  exact-duplicate, near-duplicate and fresh shares, as JSON lines, plus
+  the corpus as ``documents.parquet`` for the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -25,6 +25,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 TRIP_COLUMNS = (
@@ -152,134 +153,63 @@ def write_locations(path: str, stations: Stations, upto: int) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Analyst tables (the sf* layout the registered queries read)
+# Analyst tables: seeded row samples of the reference tables in ref/
 # ---------------------------------------------------------------------------
 
-WORDS = (
-    "batch part spark line column order small sort fast value scan a hash "
-    "slow group agg filter query big key window row table stream merge data "
-    "vector join customer the"
-).split()
-PART_ADJ = ("blue", "old", "small", "new", "large", "hot", "cold", "red")
-PART_NOUN = ("widget", "gizmo", "ring", "gear", "bolt", "plate", "rod", "anvil")
+REF_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "ref")
+TABLES = (
+    "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+    "events", "documents", "embeddings",
+)
 
 
-def _days(rng, lo: str, hi: str, n: int) -> np.ndarray:
-    a, b = np.datetime64(lo, "D"), np.datetime64(hi, "D")
-    return (a + rng.integers(0, (b - a).astype(int) + 1, n).astype("timedelta64[D]")).astype("datetime64[us]")
+def read_ref(name: str) -> pa.Table:
+    return pq.read_table(os.path.join(REF_DIR, f"{name}.parquet"))
 
 
-def _money(rng, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
+def keep_keys(table: pa.Table, key: str, share: float, rng: np.random.Generator) -> np.ndarray:
+    """A ``share`` of the distinct values of ``key``, chosen by ``rng``."""
+    ids = np.unique(table[key].to_numpy())
+    return ids[np.sort(rng.choice(len(ids), int(round(len(ids) * share)), replace=False))]
 
 
-def _write(out_dir: str, name: str, cols: dict) -> None:
-    pq.write_table(pa.table(cols), os.path.join(out_dir, f"{name}.parquet"))
+def rows_with(table: pa.Table, key: str, values) -> pa.Table:
+    """The rows of ``table`` whose ``key`` is one of ``values``."""
+    return table.filter(pc.is_in(table[key], value_set=pa.array(np.asarray(values))))
 
 
-def doc_text(rng, n_words: int) -> str:
-    return " ".join(WORDS[i] for i in rng.integers(0, len(WORDS), n_words))
-
-
-def documents_table(docs: list[tuple[int, str, str]], rng) -> dict:
-    """``documents`` columns for (doc_id, source, text) rows."""
-    langs = np.array(["en", "es", "zh", "de", "fr"], dtype=object)
-    return {
+def documents_table(docs: list[tuple]) -> pa.Table:
+    """``documents`` rows for (doc_id, source, text, lang) tuples."""
+    return pa.table({
         "doc_id": pa.array([d[0] for d in docs], pa.int64()),
         "text": pa.array([d[2] for d in docs], pa.string()),
-        "lang": pa.array(rng.choice(langs, len(docs), p=[0.4, 0.15, 0.15, 0.15, 0.15]).tolist(), pa.string()),
+        "lang": pa.array([d[3] for d in docs], pa.string()),
         "source": pa.array([d[1] for d in docs], pa.string()),
         "n_chars": pa.array([len(d[2]) for d in docs], pa.int64()),
-    }
+    })
 
 
-def write_tables(out_dir: str, seed: int, sf: float, documents: list | None = None) -> dict[str, int]:
-    """Write the ten analyst tables at scale factor ``sf`` (sf1 = 6M
-    lineitems). ``documents`` replaces the generated document table
-    with the given (doc_id, source, text) rows. Returns row counts."""
+def write_tables(out_dir: str, seed: int, share: float, documents: list | None = None) -> dict[str, int]:
+    """Write the ten analyst tables as a seeded sample of the reference:
+    a ``share`` of its customers with all their orders and those orders'
+    lines, and a ``share`` of its users with all their events; the small
+    dimensions whole. ``documents`` replaces the reference documents
+    with the given (doc_id, source, text, lang) rows. Returns row counts."""
     os.makedirs(out_dir, exist_ok=True)
     rng = _rng(seed, "tables")
-    n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
-    n_ord, n_li, n_ev = int(1_500_000 * sf), int(6_000_000 * sf), int(1_000_000 * sf)
-    n_users, n_emb = max(int(15_000 * sf), 10), int(20_000 * sf)
-    i32, i64, f64, s = pa.int32(), pa.int64(), pa.float64(), pa.string()
-
-    regions = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-    _write(out_dir, "region", {"r_regionkey": pa.array(range(5), i32), "r_name": pa.array(regions, s)})
-    _write(out_dir, "nation", {
-        "n_nationkey": pa.array(range(25), i32),
-        "n_name": pa.array([f"NATION_{k}" for k in range(25)], s),
-        "n_regionkey": pa.array([k % 5 for k in range(25)], i32),
-    })
-    segs = np.array(["MACHINERY", "AUTOMOBILE", "FURNITURE", "HOUSEHOLD", "BUILDING"], dtype=object)
-    _write(out_dir, "customer", {
-        "c_custkey": pa.array(np.arange(n_cust), i64),
-        "c_name": pa.array([f"Customer#{k:09d}" for k in range(n_cust)], s),
-        "c_nationkey": pa.array(rng.integers(0, 25, n_cust), i32),
-        "c_acctbal": pa.array(_money(rng, -999.99, 9999.99, n_cust), f64),
-        "c_mktsegment": pa.array(rng.choice(segs, n_cust).tolist(), s),
-    })
-    _write(out_dir, "supplier", {
-        "s_suppkey": pa.array(np.arange(n_supp), i64),
-        "s_name": pa.array([f"Supplier#{k:09d}" for k in range(n_supp)], s),
-        "s_nationkey": pa.array(rng.integers(0, 25, n_supp), i32),
-        "s_acctbal": pa.array(_money(rng, -999.99, 9999.99, n_supp), f64),
-    })
-    adj, noun = rng.integers(0, 8, n_part), rng.integers(0, 8, n_part)
-    types = np.array(["LARGE", "ECONOMY", "STANDARD", "SMALL", "MEDIUM", "PROMO"], dtype=object)
-    _write(out_dir, "part", {
-        "p_partkey": pa.array(np.arange(n_part), i64),
-        "p_name": pa.array([f"{PART_ADJ[a]} {PART_NOUN[b]}" for a, b in zip(adj, noun)], s),
-        "p_brand": pa.array([f"Brand#{k}" for k in rng.integers(1, 26, n_part)], s),
-        "p_type": pa.array(rng.choice(types, n_part).tolist(), s),
-        "p_size": pa.array(rng.integers(1, 51, n_part), i32),
-        "p_retailprice": pa.array(np.round(900.0 + (np.arange(n_part) % 1000) / 10.0, 2), f64),
-    })
-    prio = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"], dtype=object)
-    _write(out_dir, "orders", {
-        "o_orderkey": pa.array(np.arange(n_ord), i64),
-        "o_custkey": pa.array(rng.integers(0, n_cust, n_ord), i64),
-        "o_orderstatus": pa.array(rng.choice(np.array(["O", "P", "F"], dtype=object), n_ord).tolist(), s),
-        "o_totalprice": pa.array(_money(rng, 1000.0, 500000.0, n_ord), f64),
-        "o_orderdate": pa.array(_days(rng, "1995-01-01", "2001-08-01", n_ord), pa.timestamp("us")),
-        "o_orderpriority": pa.array(rng.choice(prio, n_ord).tolist(), s),
-    })
-    _write(out_dir, "lineitem", {
-        "l_orderkey": pa.array(rng.integers(0, n_ord, n_li), i64),
-        "l_partkey": pa.array(rng.integers(0, n_part, n_li), i64),
-        "l_suppkey": pa.array(rng.integers(0, n_supp, n_li), i64),
-        "l_linenumber": pa.array(rng.integers(1, 8, n_li), i32),
-        "l_quantity": pa.array(rng.integers(1, 51, n_li).astype(float), f64),
-        "l_extendedprice": pa.array(_money(rng, 900.0, 105000.0, n_li), f64),
-        "l_discount": pa.array(rng.integers(0, 11, n_li) / 100.0, f64),
-        "l_tax": pa.array(rng.integers(0, 9, n_li) / 100.0, f64),
-        "l_returnflag": pa.array(rng.choice(np.array(["A", "N", "R"], dtype=object), n_li).tolist(), s),
-        "l_linestatus": pa.array(rng.choice(np.array(["O", "F"], dtype=object), n_li).tolist(), s),
-        "l_shipdate": pa.array(_days(rng, "1995-01-02", "2001-11-04", n_li), pa.timestamp("us")),
-    })
-    ev_types = np.array(["signup", "click", "error", "view", "purchase"], dtype=object)
-    ts = np.sort(rng.integers(0, 30 * 86400 * 10**6, n_ev)) + np.datetime64("2024-01-01T00:00:00", "us").astype(np.int64)
-    _write(out_dir, "events", {
-        "event_id": pa.array(np.arange(n_ev), i64),
-        "ts": pa.array(ts.astype("datetime64[us]"), pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, n_users, n_ev), i64),
-        "event_type": pa.array(rng.choice(ev_types, n_ev).tolist(), s),
-        "value": pa.array(np.round(rng.exponential(40.0, n_ev), 2), f64),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)], s),
-    })
-    if documents is None:
-        n_doc = int(50_000 * sf)
-        documents = [
-            (k, f"src{k % 20}", doc_text(rng, int(rng.integers(8, 100)))) for k in range(n_doc)
-        ]
-    _write(out_dir, "documents", documents_table(documents, rng))
-    emb = rng.standard_normal((n_emb, 64)).astype(np.float32)
-    _write(out_dir, "embeddings", {
-        "vec_id": pa.array(np.arange(n_emb), i64),
-        "embedding": pa.array(list(emb), pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, n_emb), i32),
-    })
-    return {"lineitem": n_li, "orders": n_ord, "events": n_ev, "documents": len(documents)}
+    tables = {name: read_ref(name) for name in TABLES}
+    cust = tables["customer"]
+    keys = keep_keys(cust, "c_custkey", share, rng)
+    tables["customer"] = rows_with(cust, "c_custkey", keys)
+    tables["orders"] = rows_with(tables["orders"], "o_custkey", keys)
+    tables["lineitem"] = rows_with(tables["lineitem"], "l_orderkey", tables["orders"]["o_orderkey"])
+    ev = tables["events"]
+    tables["events"] = rows_with(ev, "user_id", keep_keys(ev, "user_id", share, rng))
+    if documents is not None:
+        tables["documents"] = documents_table(documents)
+    for name, table in tables.items():
+        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
+    return {name: table.num_rows for name, table in tables.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -289,7 +219,7 @@ def write_tables(out_dir: str, seed: int, sf: float, documents: list | None = No
 
 @dataclass(frozen=True)
 class Wave:
-    docs: list[tuple[int, str, str]]  # (doc_id, source, text)
+    docs: list[tuple[int, str, str, str]]  # (doc_id, source, text, lang)
     n_exact: int
     n_near: int
     n_fresh: int
@@ -298,32 +228,39 @@ class Wave:
 def make_waves(
     seed: int, n_waves: int, per_wave: int, exact_share: float, near_share: float
 ) -> list[Wave]:
-    """Document waves: each wave copies ``exact_share`` of its docs
-    verbatim from earlier docs (earlier waves or the same wave), copies
-    ``near_share`` with one or two word substitutions, and makes the rest
-    fresh. Doc ids are unique across waves; order inside a wave is
-    shuffled so duplicates do not sit next to their originals."""
+    """Document waves built from the reference documents: each wave
+    takes its fresh share from reference documents not used before (in a
+    seeded order), copies ``exact_share`` of its docs verbatim from
+    earlier docs (earlier waves or the same wave) and ``near_share`` with
+    one or two words replaced by words of the reference vocabulary. Doc
+    ids are unique across waves; order inside a wave is shuffled so
+    duplicates do not sit next to their originals."""
     rng = _rng(seed, "waves")
-    texts: list[str] = []
+    ref = read_ref("documents")
+    ref_docs = list(zip(ref["source"].to_pylist(), ref["text"].to_pylist(), ref["lang"].to_pylist()))
+    vocab = sorted({w for _, text, _ in ref_docs for w in text.split(" ")})
+    unused = iter(rng.permutation(len(ref_docs)).tolist())
+    seen: list[tuple[str, str, str]] = []
     waves, next_id = [], 0
     for _ in range(n_waves):
         n_exact = int(round(per_wave * exact_share))
         n_near = int(round(per_wave * near_share))
         n_fresh = per_wave - n_exact - n_near
-        fresh = [doc_text(rng, int(rng.integers(20, 100))) for _ in range(n_fresh)]
-        pool = texts + fresh
+        fresh = [ref_docs[next(unused)] for _ in range(n_fresh)]
+        pool = seen + fresh
         exact = [pool[k] for k in rng.integers(0, len(pool), n_exact)]
         near = []
         for k in rng.integers(0, len(pool), n_near):
-            words = pool[k].split(" ")
+            source, text, lang = pool[k]
+            words = text.split(" ")
             for j in rng.integers(0, len(words), int(rng.integers(1, 3))):
-                words[j] = WORDS[int(rng.integers(0, len(WORDS)))]
-            near.append(" ".join(words))
+                words[j] = vocab[int(rng.integers(0, len(vocab)))]
+            near.append((source, " ".join(words), lang))
         batch = fresh + exact + near
         order = rng.permutation(len(batch))
-        docs = [(next_id + j, f"src{int(rng.integers(0, 20))}", batch[k]) for j, k in enumerate(order)]
+        docs = [(next_id + j, *batch[k]) for j, k in enumerate(order)]
         next_id += len(docs)
-        texts.extend(fresh)
+        seen.extend(fresh)
         waves.append(Wave(docs, n_exact, n_near, n_fresh))
     return waves
 
@@ -331,5 +268,5 @@ def make_waves(
 def write_wave(path: str, wave: Wave) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
-        for doc_id, source, text in wave.docs:
+        for doc_id, source, text, _lang in wave.docs:
             f.write(json.dumps({"doc_id": doc_id, "source": source, "text": text}) + "\n")

@@ -1,6 +1,6 @@
 """Run one workload over several seeds and summarise each metric.
 
-    python3 perfbench/repeat.py --workload analyst_mix --seeds 1-10 --seconds 5
+    python3 perfbench/repeat.py --workload analyst_corpus --seeds 1-10 --seconds 5
     python3 perfbench/repeat.py --workload daily_etl --seeds 1-3 --seconds 5 --overhead
 
 For every end-to-end metric it prints the median over the seeds and the

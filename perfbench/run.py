@@ -7,7 +7,7 @@ the last line of stdout, one JSON object with ``correct``, ``attempted``,
 ``failed`` and ``metrics``. ``--trace 0`` reports the end-to-end metrics
 (measured with tracing off); ``--trace 1`` reports the per-layer metrics
 of a traced run and writes the traced end-to-end values to stderr, so
-``overhead.py`` can take traced minus untraced.
+``repeat.py --overhead`` can take traced minus untraced.
 
 The session is sized from the machine through the variables
 ``session.py`` already reads: ``SPARK_GRAFT_CPUS`` = usable CPUs,
@@ -29,7 +29,7 @@ ROOT = os.path.dirname(HERE)
 PACKAGE = "fordgobike_data_pipeline_spark"
 
 END_TO_END = {
-    "setup_s": "s", "op_p50_cpu_s": "s", "items_per_cpu_s": "1/s", "full_pass_cpu_s": "s",
+    "setup_s": "s", "op_geomean_s": "s", "op_geomean_cpu_s": "s", "items_per_cpu_s": "1/s", "full_pass_cpu_s": "s",
 }
 
 
@@ -108,7 +108,7 @@ def main(argv: list[str]) -> int:
         gateway.proc.wait(timeout=60)
         shutil.rmtree(os.path.join(ROOT, ".perfbench_work"), ignore_errors=True)
 
-    if not (out.op_s and out.rates and out.full_pass_s):
+    if not (out.op_s and out.op_wall_s and out.rates and out.full_pass_s):
         print(f"perfbench: nothing measured ({out.failed} of {out.attempted} failed)", file=sys.stderr)
         return 1
     e2e = {"setup_s": out.setup_s, **out.metrics()}

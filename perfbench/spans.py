@@ -120,6 +120,24 @@ class CpuClock:
         return ticks / self.TICK
 
 
+class StealClock:
+    """Seconds the host lent this machine's CPUs to other guests (steal
+    time), per CPU, from the ``steal`` column of ``/proc/stat``. A
+    latency taken as wall time less the steal over its window does not
+    grow with the host's load, yet still grows when work loses
+    parallelism or waits."""
+
+    TICK = os.sysconf("SC_CLK_TCK")
+
+    @classmethod
+    def seconds(cls) -> float:
+        with open("/proc/stat") as f:
+            lines = f.read().splitlines()
+        n_cpus = sum(1 for ln in lines if ln.startswith("cpu") and ln[3:4].isdigit())
+        # cpu  user nice system idle iowait irq softirq steal ...
+        return int(lines[0].split()[8]) / cls.TICK / max(1, n_cpus)
+
+
 def _union_ms(intervals: list[tuple[float, float]]) -> float:
     total, end = 0.0, float("-inf")
     for a, b in sorted(intervals):

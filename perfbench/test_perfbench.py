@@ -31,7 +31,7 @@ def _write_all(out: str, seed: int) -> None:
     stations = gen.make_stations(seed, 30)
     gen.write_trip_csv(os.path.join(out, "trips", gen.trip_file_name(DAY)), seed, "t", DAY, 400, stations, 20)
     gen.write_locations(os.path.join(out, "geo", "locations.jsonl"), stations, 30)
-    gen.write_tables(os.path.join(out, "sf"), seed, 0.001)
+    gen.write_tables(os.path.join(out, "sf"), seed, 0.05)
     for i, wave in enumerate(gen.make_waves(seed, 3, 40, 0.2, 0.15)):
         gen.write_wave(os.path.join(out, "waves", f"{i}.jsonl"), wave)
 
@@ -66,6 +66,27 @@ def test_waves_have_the_stated_shares():
         repeats = len(texts) - len(set(texts) - seen)
         assert repeats >= w.n_exact
         seen |= set(texts)
+
+
+def test_table_sample_keeps_whole_customers_and_users(tmp_path):
+    import pyarrow.parquet as pq
+
+    counts = gen.write_tables(str(tmp_path), 7, 0.5)
+    read = lambda name: pq.read_table(str(tmp_path / f"{name}.parquet")).to_pandas()  # noqa: E731
+    ref = lambda name: gen.read_ref(name).to_pandas()  # noqa: E731
+    cust, orders, lines, events = read("customer"), read("orders"), read("lineitem"), read("events")
+    assert counts["customer"] == round(len(ref("customer")) * 0.5)
+    # every order of a kept customer, every line of a kept order, every
+    # event of a kept user: per-key counts are those of the reference
+    ref_orders = ref("orders")
+    assert len(orders) == ref_orders.o_custkey.isin(cust.c_custkey).sum()
+    assert set(orders.o_custkey) <= set(cust.c_custkey)
+    assert len(lines) == ref("lineitem").l_orderkey.isin(orders.o_orderkey).sum()
+    ref_events = ref("events")
+    assert len(events) == ref_events.user_id.isin(events.user_id).sum()
+    assert events.user_id.nunique() == round(ref_events.user_id.nunique() * 0.5)
+    for name in ("region", "nation", "supplier", "part", "documents"):
+        assert counts[name] == gen.read_ref(name).num_rows
 
 
 def test_printed_names_are_declared():
@@ -135,7 +156,7 @@ def test_oracle_check_fails_when_a_cell_changes(spark, tmp_path):
     from fordgobike_data_pipeline_spark import harness
 
     sf_dir = str(tmp_path / "sf")
-    gen.write_tables(sf_dir, 2, 0.002)
+    gen.write_tables(sf_dir, 2, 0.05)
     key = "q_tpch_q5"
     compare = workloads.oracle_compare(str(tmp_path))
     df = harness.all_queries()[key](spark, sf_dir)
@@ -171,7 +192,7 @@ def test_corpus_checks_fail_on_a_lost_doc_and_a_wrong_count(spark, tmp_path):
 
     docs = [d for w in waves for d in w.docs]
     sf_dir = os.path.join(work, "sf")
-    gen.write_tables(sf_dir, 4, 0.0001, docs)
+    gen.write_tables(sf_dir, 4, 0.0, docs)
     schema = StructType.fromDDL("doc_id BIGINT, source STRING, text STRING")
     _, report = corpus.clean_corpus(
         read_jsonl(spark, sink["landing"], schema), min_quality=0.4,
