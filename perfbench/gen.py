@@ -189,22 +189,27 @@ def documents_table(docs: list[tuple]) -> pa.Table:
     })
 
 
-def write_tables(out_dir: str, seed: int, share: float, documents: list | None = None) -> dict[str, int]:
-    """Write the ten analyst tables as a seeded sample of the reference:
-    a ``share`` of its customers with all their orders and those orders'
-    lines, and a ``share`` of its users with all their events; the small
-    dimensions whole. ``documents`` replaces the reference documents
-    with the given (doc_id, source, text, lang) rows. Returns row counts."""
-    os.makedirs(out_dir, exist_ok=True)
-    rng = _rng(seed, "tables")
-    tables = {name: read_ref(name) for name in TABLES}
-    cust = tables["customer"]
-    keys = keep_keys(cust, "c_custkey", share, rng)
-    tables["customer"] = rows_with(cust, "c_custkey", keys)
-    tables["orders"] = rows_with(tables["orders"], "o_custkey", keys)
-    tables["lineitem"] = rows_with(tables["lineitem"], "l_orderkey", tables["orders"]["o_orderkey"])
+def sample_tables(tables: dict[str, pa.Table], share: float, rng: np.random.Generator) -> dict[str, pa.Table]:
+    """A ``share`` of the customers with all their orders and those
+    orders' lines, and a ``share`` of the users with all their events;
+    the other tables whole. Orders per customer, lines per order and
+    events per user stay as in ``tables``."""
+    out = dict(tables)
+    keys = keep_keys(tables["customer"], "c_custkey", share, rng)
+    out["customer"] = rows_with(tables["customer"], "c_custkey", keys)
+    out["orders"] = rows_with(tables["orders"], "o_custkey", keys)
+    out["lineitem"] = rows_with(tables["lineitem"], "l_orderkey", out["orders"]["o_orderkey"])
     ev = tables["events"]
-    tables["events"] = rows_with(ev, "user_id", keep_keys(ev, "user_id", share, rng))
+    out["events"] = rows_with(ev, "user_id", keep_keys(ev, "user_id", share, rng))
+    return out
+
+
+def write_tables(out_dir: str, seed: int, share: float, documents: list | None = None) -> dict[str, int]:
+    """Write the ten analyst tables as a seeded ``sample_tables`` of the
+    reference. ``documents`` replaces the reference documents with the
+    given (doc_id, source, text, lang) rows. Returns row counts."""
+    os.makedirs(out_dir, exist_ok=True)
+    tables = sample_tables({name: read_ref(name) for name in TABLES}, share, _rng(seed, "tables"))
     if documents is not None:
         tables["documents"] = documents_table(documents)
     for name, table in tables.items():

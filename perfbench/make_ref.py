@@ -33,24 +33,15 @@ import numpy as np
 import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from gen import REF_DIR, keep_keys, rows_with  # noqa: E402
+from gen import REF_DIR, TABLES, sample_tables  # noqa: E402
 
 SHARE = 0.2
-WHOLE = ("region", "nation", "supplier", "part", "documents")
 
 
 def build(src: str, out: str) -> dict[str, int]:
-    rng = np.random.default_rng(0)
-    read = lambda name: pq.read_table(os.path.join(src, f"{name}.parquet"))  # noqa: E731
-    tables = {name: read(name) for name in WHOLE}
-    cust = read("customer")
-    keys = keep_keys(cust, "c_custkey", SHARE, rng)
-    tables["customer"] = rows_with(cust, "c_custkey", keys)
-    tables["orders"] = rows_with(read("orders"), "o_custkey", keys)
-    tables["lineitem"] = rows_with(read("lineitem"), "l_orderkey", tables["orders"]["o_orderkey"])
-    ev = read("events")
-    tables["events"] = rows_with(ev, "user_id", keep_keys(ev, "user_id", SHARE, rng))
-    tables["embeddings"] = read("embeddings").slice(0, 0)
+    tables = {name: pq.read_table(os.path.join(src, f"{name}.parquet")) for name in TABLES}
+    tables["embeddings"] = tables["embeddings"].slice(0, 0)
+    tables = sample_tables(tables, SHARE, np.random.default_rng(0))
 
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
