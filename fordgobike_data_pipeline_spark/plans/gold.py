@@ -3,7 +3,8 @@
 Re-expresses the reference's materialized views
 (include/sql/gold/gold_ddl.sql:11-193). Refresh semantics
 (`REFRESH MATERIALIZED VIEW`, gold_ddl.sql:201-244) become recompute +
-atomic overwrite in plans/runner.py; the four marts are independent
+atomic overwrite in plans/runner.py (full, or spliced over the groups a
+new batch touches); the four marts are independent
 DataFrame jobs (the reference fans them out in parallel,
 dags/gold_dag.py:70 — Spark's scheduler does the same within a session).
 
@@ -43,10 +44,18 @@ def dm_daily_trip_summary(fact_trips: DataFrame, dim_date: DataFrame) -> DataFra
     )
 
 
-def dm_station_popularity(fact_trips: DataFrame, dim_locations: DataFrame) -> DataFrame:
+def dm_station_popularity(
+    fact_trips: DataFrame, dim_locations: DataFrame, end_trips: DataFrame | None = None
+) -> DataFrame:
     """gold.dm_station_popularity (gold_ddl.sql:28-91): starts ∪ ends via
     FULL OUTER, COALESCE key + zero defaults, net_flow/total, pre-aggregated
-    station_details left-joined back (MAX-dedup, gold_ddl.sql:53-67)."""
+    station_details left-joined back (MAX-dedup, gold_ddl.sql:53-67).
+
+    Starts are counted over ``fact_trips``, ends over ``end_trips``
+    (default: the same rows) — the incremental refresh passes each side
+    its own semi-join slice instead of a deduplicated union of both."""
+    if end_trips is None:
+        end_trips = fact_trips
     loc = F.broadcast(dim_locations)
     starts = (
         fact_trips.join(loc, fact_trips.start_location_id == dim_locations.location_id)
@@ -54,7 +63,7 @@ def dm_station_popularity(fact_trips: DataFrame, dim_locations: DataFrame) -> Da
         .agg(F.count("trip_id").alias("total_starts"))
     )
     ends = (
-        fact_trips.join(loc, fact_trips.end_location_id == dim_locations.location_id)
+        end_trips.join(loc, end_trips.end_location_id == dim_locations.location_id)
         .groupBy("station_name")
         .agg(F.count("trip_id").alias("total_ends"))
     )

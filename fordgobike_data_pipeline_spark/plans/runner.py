@@ -2,28 +2,45 @@
 
 Replaces the reference's five Airflow DAGs (ddl → bronze → silver →
 gold → report, SURVEY §2.10 D6): each stage is a function over
-DataFrames; tables publish atomically (io.publish_overwrite) so a
-failed run leaves the previous version intact — the stand-in for the
-reference's single Postgres transaction (silver_load.sql:285-308).
-The run report (S10: Airflow REST scrape → email) becomes a metrics
-table the runner appends to.
+DataFrames. The run report (S10: Airflow REST scrape → email) becomes a
+metrics table the runner appends to.
 
-Incrementality: bronze is partitioned by ``_batch_id``; silver reads
-only batches above its high-water mark (partition-pruned scan), then
-advances the mark — replacing the UPDATE-every-row flag
-(silver_load.sql:273-275), which would rewrite the fact table each run
-at 100 TB.
+Two write disciplines:
+
+* append-only — bronze ``bike_trips`` (partitioned by ``_batch_id``)
+  and silver ``fact_trips`` (partitioned by ``p_year``) only ever gain a
+  batch's rows; silver's high-water mark makes a re-run append nothing;
+* atomic publish (io.publish_overwrite) — dims, marts and the dim views
+  are rewritten whole, write-temp-then-swap, so a failed run leaves the
+  previous version intact: the stand-in for the reference's single
+  Postgres transaction (silver_load.sql:285-308).
+
+Incrementality: silver lists bronze's ``_batch_id=N`` directories,
+reads only batches above its high-water mark (partition-pruned scan),
+appends their facts, then advances the mark — replacing the
+UPDATE-every-row flag (silver_load.sql:273-275), which would rewrite
+the fact table each run at 100 TB. Gold then splices only the groups
+the new batches touch (build_gold_incremental).
+
+Fixed cost per batch: every warehouse read is bound to its declared
+schema (schemas.WAREHOUSE_TABLES), so no scan launches a footer
+inference job, and independent table writes go through one thread pool
+(_publish_concurrently) so one write's driver-side planning overlaps
+another's tasks.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import HighWaterMark, append, publish_overwrite
+from ..schemas import WAREHOUSE_TABLES
 from . import bronze as bronze_mod
 from . import gold as gold_mod
 from . import silver as silver_mod
@@ -71,7 +88,26 @@ class Warehouse:
         return os.path.exists(self.path(layer, table))
 
     def read(self, spark: SparkSession, layer: str, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(layer, table))
+        """Scan bound to the table's declared schema: no footer-inference job."""
+        return spark.read.schema(WAREHOUSE_TABLES[(layer, table)]).parquet(self.path(layer, table))
+
+    def batch_ids(self, layer: str, table: str) -> list[int]:
+        """Batch ids landed in a ``_batch_id``-partitioned table, from its
+        directory listing (no Spark job)."""
+        path = self.path(layer, table)
+        names = os.listdir(path) if os.path.isdir(path) else []
+        return sorted(int(n.split("=", 1)[1]) for n in names if n.startswith("_batch_id="))
+
+
+def _publish_concurrently(writes) -> None:
+    """Run independent table writes (zero-argument callables) on one
+    thread pool so the Spark scheduler interleaves their jobs and one
+    write's driver-side planning overlaps another's tasks (the reference
+    fans out its MV refreshes the same way, dags/gold_dag.py:70).
+    Re-raises the first failure once every write has finished."""
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        for fut in [pool.submit(write) for write in writes]:
+            fut.result()
 
 
 def ingest_bronze(
@@ -91,48 +127,54 @@ def load_locations(spark: SparkSession, wh: Warehouse, locations_geo: DataFrame)
     publish_overwrite(merged, path)
 
 
+def _marks(wh: Warehouse) -> HighWaterMark:
+    """Per-stage high-water marks: ``silver`` (last bronze batch in the
+    fact) and ``fact_trips_view`` (last fact batch in that view)."""
+    return HighWaterMark(os.path.join(wh.root, "_state"))
+
+
 def build_silver(spark: SparkSession, wh: Warehouse) -> dict[str, int]:
     """Entry point 2 (SURVEY §3): the five-step silver ETL, incremental
     over un-consumed bronze batches."""
-    hwm = HighWaterMark(os.path.join(wh.root, "_state"))
+    hwm = _marks(wh)
     mark = hwm.get("silver")
-    all_trips = wh.read(spark, "bronze", "bike_trips")
-    new_trips = all_trips.filter(F.col("_batch_id") > mark)
-    if new_trips.isEmpty():
+    batches = [b for b in wh.batch_ids("bronze", "bike_trips") if b > mark]
+    if not batches:
         return {"consumed_batches": 0}
+    # bounded above too: a batch landing while this runs waits for the next run
+    new_trips = wh.read(spark, "bronze", "bike_trips").filter(
+        F.col("_batch_id").between(mark + 1, batches[-1])
+    )
     geo = wh.read(spark, "bronze", "locations")
 
-    def merge(table: str, new: DataFrame, keys: list[str]) -> DataFrame:
+    def merge(table: str, new: DataFrame, keys: list[str]):
         existing = wh.read(spark, "silver", table) if wh.exists("silver", table) else None
-        return silver_mod.upsert_skip_conflict(existing, new, keys)
+        merged = silver_mod.upsert_skip_conflict(existing, new, keys)
+        return partial(publish_overwrite, merged, wh.path("silver", table))
 
-    dim_locations = merge(
-        "dim_locations", silver_mod.build_dim_locations(new_trips, geo), ["location_id"]
-    )
-    publish_overwrite(dim_locations, wh.path("silver", "dim_locations"))
+    _publish_concurrently([
+        merge("dim_locations", silver_mod.build_dim_locations(new_trips, geo), ["location_id"]),
+        merge("dim_user_types", silver_mod.build_dim_user_types(new_trips), ["user_type_id"]),
+        merge("dim_date", silver_mod.build_dim_date(new_trips), ["date_id"]),
+    ])
 
-    dim_user_types = merge(
-        "dim_user_types", silver_mod.build_dim_user_types(new_trips), ["user_type_id"]
-    )
-    publish_overwrite(dim_user_types, wh.path("silver", "dim_user_types"))
-
-    dim_date = merge("dim_date", silver_mod.build_dim_date(new_trips), ["date_id"])
-    publish_overwrite(dim_date, wh.path("silver", "dim_date"))
-
-    dim_loc_published = wh.read(spark, "silver", "dim_locations")
-    new_facts = silver_mod.build_fact_trips(new_trips, dim_loc_published)
-    # fact is append-only per batch, partitioned by start-date year for
-    # downstream partition pruning at scale
+    # the fact is append-only, like bronze: only the new batches' rows
+    # are written, partitioned by start-date year for downstream
+    # partition pruning at scale
+    new_facts = silver_mod.build_fact_trips(new_trips, wh.read(spark, "silver", "dim_locations"))
     fact = new_facts.withColumn("p_year", (F.col("start_date_id") / 10000).cast("int"))
-    existing_fact = (
-        wh.read(spark, "silver", "fact_trips") if wh.exists("silver", "fact_trips") else None
-    )
-    merged_fact = fact if existing_fact is None else existing_fact.unionByName(fact)
-    publish_overwrite(merged_fact, wh.path("silver", "fact_trips"), partition_by=["p_year"])
+    append(fact, wh.path("silver", "fact_trips"), partition_by=["p_year"])
+    hwm.set("silver", batches[-1])
+    return {"consumed_batches": len(batches)}
 
-    max_batch = all_trips.agg(F.max("_batch_id")).first()[0]
-    hwm.set("silver", int(max_batch))
-    return {"consumed_batches": 1}
+
+def _dim_views(dim_locations: DataFrame, dim_user_types: DataFrame, dim_date: DataFrame):
+    """The three renaming views over the (tiny) dims, by table name."""
+    return {
+        "dim_locations_view": gold_mod.dim_locations_view(dim_locations),
+        "dim_user_types_view": gold_mod.dim_user_types_view(dim_user_types),
+        "dim_date_view": gold_mod.dim_date_view(dim_date),
+    }
 
 
 def build_gold(spark: SparkSession, wh: Warehouse) -> None:
@@ -150,23 +192,16 @@ def build_gold(spark: SparkSession, wh: Warehouse) -> None:
         "dm_user_behavior_summary": gold_mod.dm_user_behavior_summary(
             fact, dim_user_types, dim_date
         ),
-        "dim_locations_view": gold_mod.dim_locations_view(dim_locations),
-        "dim_user_types_view": gold_mod.dim_user_types_view(dim_user_types),
-        "dim_date_view": gold_mod.dim_date_view(dim_date),
+        **_dim_views(dim_locations, dim_user_types, dim_date),
         "fact_trips_view": gold_mod.fact_trips_view(fact),
     }
-    # the marts are independent jobs — submit concurrently so the Spark
-    # scheduler interleaves their stages (the reference fans out its four
-    # MV refreshes the same way, dags/gold_dag.py:70)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = {
-            name: pool.submit(publish_overwrite, df, wh.path("gold", name))
-            for name, df in marts.items()
-        }
-        for name, fut in futures.items():
-            fut.result()  # surface the first failure
+    _publish_concurrently(
+        partial(publish_overwrite, df, wh.path("gold", name)) for name, df in marts.items()
+    )
+    # the rebuilt fact view holds every batch silver has consumed, so the
+    # next incremental refresh appends only later ones
+    marks = _marks(wh)
+    marks.set("fact_trips_view", marks.get("silver"))
 
 
 def _null_safe_cond(left: DataFrame, right: DataFrame, keys: list[str]):
@@ -203,25 +238,8 @@ def _splice_publish(
     publish_overwrite(merged, path)
 
 
-def refresh_daily_summary_incremental(
-    spark: SparkSession, wh: Warehouse, new_batch_min: int
-) -> None:
-    """Back-compat wrapper: incremental refresh of the daily mart only."""
-    build_gold_incremental(spark, wh, new_batch_min, marts=("dm_daily_trip_summary",))
-
-
-def build_gold_incremental(
-    spark: SparkSession,
-    wh: Warehouse,
-    new_batch_min: int,
-    marts: tuple[str, ...] = (
-        "dm_daily_trip_summary",
-        "dm_station_popularity",
-        "dm_popular_routes",
-        "dm_user_behavior_summary",
-    ),
-) -> None:
-    """Incremental maintenance for the gold marts.
+def build_gold_incremental(spark: SparkSession, wh: Warehouse, new_batch_min: int) -> None:
+    """Incremental maintenance for the gold marts and views.
 
     The reference re-runs each whole MV per refresh (gold_ddl.sql:
     201-244) — a full fact scan every time. Every mart groups by keys a
@@ -234,8 +252,17 @@ def build_gold_incremental(
     Correctness per mart: the recompute slice contains *every* fact row
     belonging to an affected group (group membership is a function of
     the group key we semi-join on), so recomputed groups are complete;
-    station popularity additionally restricts its output to affected
-    stations because a trip belongs to two station groups at once.
+    station popularity counts starts from the start-side slice and ends
+    from the end-side one (a trip belongs to two station groups at
+    once), then keeps only the touched stations, whose counts are
+    complete on both sides.
+
+    The views: the three dim views are republished whole (the dims are
+    tiny); ``fact_trips_view`` gets the new batches' rows appended,
+    once — its own high-water mark skips batches already in it, so a
+    re-run splices the marts again and appends nothing.
+
+    All eight writes go out as one concurrent publish.
     """
     from ..functions import exprs as E
 
@@ -245,74 +272,92 @@ def build_gold_incremental(
     dim_date = wh.read(spark, "silver", "dim_date")
     new_fact = fact.filter(F.col("_batch_id") >= new_batch_min)
 
-    if "dm_daily_trip_summary" in marts:
-        affected = new_fact.select("start_date_id").distinct()
-        fact_slice = fact.join(F.broadcast(affected), "start_date_id", "left_semi")
-        rec = gold_mod.dm_daily_trip_summary(fact_slice, dim_date)
-        keys = affected.select(E.key_to_date("start_date_id").alias("date"))
-        _splice_publish(spark, wh, "dm_daily_trip_summary", rec, keys, ["date"])
+    def splice(table: str, recomputed: DataFrame, affected: DataFrame, key_cols: list[str]):
+        return partial(_splice_publish, spark, wh, table, recomputed, affected, key_cols)
 
-    if "dm_station_popularity" in marts:
-        names = dim_locations.select("location_id", "station_name")
-        touched = (
+    affected_dates = new_fact.select("start_date_id").distinct()
+    daily = splice(
+        "dm_daily_trip_summary",
+        gold_mod.dm_daily_trip_summary(
+            fact.join(F.broadcast(affected_dates), "start_date_id", "left_semi"), dim_date
+        ),
+        affected_dates.select(E.key_to_date("start_date_id").alias("date")),
+        ["date"],
+    )
+
+    names = dim_locations.select("location_id", "station_name")
+    touched = (
+        new_fact.join(F.broadcast(names), new_fact.start_location_id == names.location_id)
+        .select("station_name")
+        .union(
             new_fact.join(
-                F.broadcast(names), new_fact.start_location_id == names.location_id
-            )
-            .select("station_name")
-            .union(
-                new_fact.join(
-                    F.broadcast(names), new_fact.end_location_id == names.location_id
-                ).select("station_name")
-            )
-            .filter(F.col("station_name").isNotNull())
-            .distinct()
+                F.broadcast(names), new_fact.end_location_id == names.location_id
+            ).select("station_name")
         )
-        ids = names.join(F.broadcast(touched), "station_name", "left_semi").select(
-            "location_id"
-        )
-        s_side = fact.join(
-            F.broadcast(ids), fact.start_location_id == ids.location_id, "left_semi"
-        )
-        e_side = fact.join(
-            F.broadcast(ids), fact.end_location_id == ids.location_id, "left_semi"
-        )
-        fact_slice = s_side.unionByName(e_side).dropDuplicates(["trip_id"])
-        rec = gold_mod.dm_station_popularity(fact_slice, dim_locations).join(
+        .filter(F.col("station_name").isNotNull())
+        .distinct()
+    )
+    ids = names.join(F.broadcast(touched), "station_name", "left_semi").select("location_id")
+    starts = fact.join(F.broadcast(ids), fact.start_location_id == ids.location_id, "left_semi")
+    ends = fact.join(F.broadcast(ids), fact.end_location_id == ids.location_id, "left_semi")
+    stations = splice(
+        "dm_station_popularity",
+        gold_mod.dm_station_popularity(starts, dim_locations, end_trips=ends).join(
             F.broadcast(touched), "station_name", "left_semi"
-        )
-        _splice_publish(spark, wh, "dm_station_popularity", rec, touched, ["station_name"])
+        ),
+        touched,
+        ["station_name"],
+    )
 
-    if "dm_popular_routes" in marts:
-        pairs = (
-            new_fact.select("start_location_id", "end_location_id").distinct().na.drop()
-        )
-        fact_slice = fact.join(
-            F.broadcast(pairs), ["start_location_id", "end_location_id"], "left_semi"
-        )
-        rec = gold_mod.dm_popular_routes(fact_slice, dim_locations)
-        _splice_publish(
-            spark, wh, "dm_popular_routes", rec, pairs,
-            ["start_location_id", "end_location_id"],
+    route_keys = ["start_location_id", "end_location_id"]
+    pairs = new_fact.select(*route_keys).distinct().na.drop()
+    routes = splice(
+        "dm_popular_routes",
+        gold_mod.dm_popular_routes(
+            fact.join(F.broadcast(pairs), route_keys, "left_semi"), dim_locations
+        ),
+        pairs,
+        route_keys,
+    )
+
+    def keyed(f: DataFrame) -> DataFrame:
+        return (
+            f.join(F.broadcast(dim_user_types), "user_type_id")
+            .join(F.broadcast(dim_date), f.start_date_id == dim_date.date_id)
+            .withColumn("age", F.col("year") - F.col("member_birth_year"))
         )
 
-    if "dm_user_behavior_summary" in marts:
-        def keyed(f: DataFrame) -> DataFrame:
-            return (
-                f.join(F.broadcast(dim_user_types), "user_type_id")
-                .join(F.broadcast(dim_date), f.start_date_id == dim_date.date_id)
-                .withColumn("age", F.col("year") - F.col("member_birth_year"))
-            )
+    behavior_keys = ["user_type", "member_gender", "bike_share_for_all_trip", "age"]
+    groups = keyed(new_fact).select(*behavior_keys).distinct()
+    enriched = keyed(fact)
+    behavior = splice(
+        "dm_user_behavior_summary",
+        gold_mod.dm_user_behavior_summary(
+            enriched.join(
+                F.broadcast(groups), _null_safe_cond(enriched, groups, behavior_keys), "left_semi"
+            ).select(*fact.columns),
+            dim_user_types,
+            dim_date,
+        ),
+        groups,
+        behavior_keys,
+    )
 
-        key_cols = ["user_type", "member_gender", "bike_share_for_all_trip", "age"]
-        affected = keyed(new_fact).select(*key_cols).distinct()
-        enriched = keyed(fact)
-        fact_slice = enriched.join(
-            F.broadcast(affected),
-            _null_safe_cond(enriched, affected, key_cols),
-            "left_semi",
-        ).select(*fact.columns)
-        rec = gold_mod.dm_user_behavior_summary(fact_slice, dim_user_types, dim_date)
-        _splice_publish(spark, wh, "dm_user_behavior_summary", rec, affected, key_cols)
+    marks = _marks(wh)
+    folded, top = marks.get("fact_trips_view"), marks.get("silver")
+
+    def append_fact_view() -> None:
+        if top > folded:
+            unseen = new_fact.filter(F.col("_batch_id").between(folded + 1, top))
+            append(gold_mod.fact_trips_view(unseen), wh.path("gold", "fact_trips_view"))
+            marks.set("fact_trips_view", top)
+
+    views = _dim_views(dim_locations, dim_user_types, dim_date)
+    _publish_concurrently([
+        daily, stations, routes, behavior,
+        *(partial(publish_overwrite, df, wh.path("gold", name)) for name, df in views.items()),
+        append_fact_view,
+    ])
 
 
 def run_pipeline(

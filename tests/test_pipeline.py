@@ -5,12 +5,16 @@ notebook's manual audits plus incremental/idempotency properties."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fordgobike_data_pipeline_spark.plans import runner, silver
 from fordgobike_data_pipeline_spark.plans.runner import Warehouse
+from fordgobike_data_pipeline_spark.schemas import WAREHOUSE_TABLES
 
 from . import fixtures
 
@@ -23,6 +27,18 @@ def wh(spark, tmp_path_factory):
         spark, w, fixtures.trips_df(spark), fixtures.locations_df(spark), batch_id=1
     )
     return w
+
+
+def _last_job_id(spark) -> int:
+    """Id of the newest job the status store has seen (-1 if none)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def _rows(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
 
 
 def test_dim_locations(spark, wh):
@@ -200,6 +216,40 @@ def test_incremental_gold_refresh_equals_full(spark, wh):
         assert got == want, f"{table}: incremental != full"
 
 
+def test_incremental_gold_refreshes_views(spark, wh, tmp_path):
+    """After batch 2 + build_gold_incremental (previous tests), every
+    renaming view equals the one a full build_gold publishes."""
+    full = Warehouse(str(tmp_path))
+    os.symlink(os.path.join(wh.root, "silver"), os.path.join(full.root, "silver"))
+    runner.build_gold(spark, full)
+    for view in ("dim_locations_view", "dim_user_types_view", "dim_date_view", "fact_trips_view"):
+        got, want = wh.read(spark, "gold", view), full.read(spark, "gold", view)
+        assert _rows(got) == _rows(want), f"{view}: stale after build_gold_incremental"
+
+
+def test_warehouse_reads_are_schema_bound(spark, wh):
+    """Every table run_pipeline + one incremental batch wrote is
+    declared, its footer schema equals the declared one (names, types,
+    order), and Warehouse.read of it runs no Spark job."""
+    on_disk = {
+        (layer, table)
+        for layer in ("bronze", "silver", "gold", "_state")
+        for table in os.listdir(os.path.join(wh.root, layer))
+        if os.path.isdir(wh.path(layer, table))
+    }
+    assert on_disk == set(WAREHOUSE_TABLES)
+    for (layer, table), ddl in WAREHOUSE_TABLES.items():
+        inferred = spark.read.parquet(wh.path(layer, table)).schema
+        declared = T.StructType.fromDDL(ddl)
+        assert [(f.name, f.dataType) for f in inferred] == [
+            (f.name, f.dataType) for f in declared
+        ], f"{layer}.{table}"
+        before = _last_job_id(spark)
+        df = wh.read(spark, layer, table)
+        assert df.columns == declared.names
+        assert _last_job_id(spark) == before, f"reading {layer}.{table} ran a job"
+
+
 def test_catalog_registration(spark, wh):
     """D1: published tables addressable by <layer>.<name> via the
     catalog after registration."""
@@ -258,3 +308,37 @@ def test_metrics_table(spark, wh):
     m = wh.read(spark, "_state", "run_metrics")
     stages = {r.stage for r in m.collect()}
     assert {"bronze", "locations", "silver", "gold"} <= stages
+
+
+# silver + build_gold_incremental of one 60-trip fixture drop, as
+# measured (70 before reads were schema-bound and the fact append-only):
+# 3 dim publishes and the fact append in silver, 4 mart splices and 4
+# view writes in gold, each with its AQE query-stage jobs
+DROP_JOB_BUDGET = 54
+
+
+def test_daily_drop_job_budget_and_append_only_fact(spark, tmp_path):
+    """A daily drop costs a bounded number of jobs; the fact is
+    append-only (rows = trips ingested after three batches) and a rerun
+    of silver or incremental gold adds nothing."""
+    wh = Warehouse(str(tmp_path))
+    trips = fixtures.make_trips()
+    runner.run_pipeline(
+        spark, wh, fixtures.trips_df(spark, trips), fixtures.locations_df(spark), batch_id=1
+    )
+    ingested = len(trips)
+    for batch_id, start_day in ((2, 10), (3, 14)):
+        rows = fixtures.make_trips(n=60, seed=20 + batch_id, start_day=start_day)
+        runner.ingest_bronze(spark, wh, fixtures.trips_df(spark, rows), batch_id=batch_id)
+        ingested += len(rows)
+        first = _last_job_id(spark)
+        assert runner.build_silver(spark, wh) == {"consumed_batches": 1}
+        runner.build_gold_incremental(spark, wh, new_batch_min=batch_id)
+        jobs = _last_job_id(spark) - first
+        assert jobs <= DROP_JOB_BUDGET, f"batch {batch_id}: {jobs} jobs"
+    assert wh.read(spark, "silver", "fact_trips").count() == ingested
+
+    assert runner.build_silver(spark, wh) == {"consumed_batches": 0}
+    runner.build_gold_incremental(spark, wh, new_batch_min=3)
+    assert wh.read(spark, "silver", "fact_trips").count() == ingested
+    assert wh.read(spark, "gold", "fact_trips_view").count() == ingested

@@ -83,6 +83,16 @@ def test_triangle_count_known_graphs(spark):
     assert (r4.n_edges, r4.n_triangles) == (6, 4)
 
 
+def test_triangle_count_int_ids_do_not_overflow_packed_key(spark):
+    # no triangle: the only wedge is 2-1-5 (1 is its degree-ordered
+    # pivot) and edge 2-5 is absent; 0-5 is present. Packing int ids in
+    # 32 bits would fold node 2 onto node 0 and count the wedge closed.
+    edges = [(1, 2), (1, 5), (0, 5), (2, 7)]
+    for types in ("a INT, b INT", "a LONG, b LONG"):
+        r = graph.triangle_count(spark.createDataFrame(edges, types)).collect()[0]
+        assert (r.n_edges, r.n_wedges, r.n_triangles) == (4, 1, 0), types
+
+
 def test_keyword_search_requires_all_terms(spark):
     docs = spark.createDataFrame(
         [

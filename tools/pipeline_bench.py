@@ -1,6 +1,8 @@
 """Pipeline-scale benchmark: push N synthetic FordGoBike-shaped trips
 (generated Spark-side from spark.range — no driver loop) through
-bronze → silver → gold and print per-stage wall times.
+bronze → silver → gold and print per-stage wall times, then land two
+3k-trip daily drops through silver → incremental gold and print each
+drop's wall times (the daily path's cost against an N-trip history).
 
     python tools/pipeline_bench.py [n_trips]
 """
@@ -22,6 +24,7 @@ from fordgobike_data_pipeline_spark.schemas import LOCATIONS_GEO  # noqa: E402
 from fordgobike_data_pipeline_spark.session import get_spark  # noqa: E402
 
 N_STATIONS = 200
+DROP_TRIPS = 3_000  # one daily drop, the size perfbench's daily_etl lands
 
 
 def synth_trips(spark, n: int):
@@ -61,6 +64,16 @@ def synth_trips(spark, n: int):
     )
 
 
+def synth_drop(spark, day: int):
+    """DROP_TRIPS trips on day ``day`` after the history's 30 days."""
+    shift = F.expr(f"INTERVAL {30 + day} DAYS")
+    return (
+        synth_trips(spark, DROP_TRIPS)
+        .withColumn("start_time", F.col("start_time") + shift)
+        .withColumn("end_time", F.col("end_time") + shift)
+    )
+
+
 def synth_geo(spark):
     rows = []
     for i in range(N_STATIONS):
@@ -89,6 +102,15 @@ def main() -> None:
     print(f"pipeline n_trips={n} fact_rows={fact_n} total={total:.2f}s")
     for m in metrics:
         print(f"  {m.stage:<10} {m.wall_sec:>7.2f}s")
+    for day in (1, 2):
+        batch_id = 1 + day
+        runner.ingest_bronze(spark, wh, synth_drop(spark, day), batch_id)
+        t0 = time.perf_counter()
+        runner.build_silver(spark, wh)
+        t1 = time.perf_counter()
+        runner.build_gold_incremental(spark, wh, batch_id)
+        t2 = time.perf_counter()
+        print(f"drop {day}: {DROP_TRIPS} trips  silver {t1 - t0:.2f}s  gold_incr {t2 - t1:.2f}s")
 
 
 if __name__ == "__main__":
